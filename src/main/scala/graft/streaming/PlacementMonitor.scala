@@ -8,9 +8,9 @@ import graft.operators.Verification
 
 /** Periodic placement-health re-verification: streams replica-snapshot
   * parquet drops and re-runs the *batch* verification operator on each
-  * micro-batch via `foreachBatch` — the idiomatic way to reuse a multi-stage
-  * batch plan (two groupBys + broadcast join) that streaming aggregation
-  * cannot express directly. The trigger is the Spark analog of the
+  * micro-batch via `foreachBatch` — the idiomatic way to reuse a batch plan
+  * (one `block_id` exchange feeding a per-block walk over sorted runs) that
+  * streaming aggregation cannot express directly. The trigger is the Spark analog of the
   * reference's fixed-rate scheduler (`Promise.java:353-376`). */
 object PlacementMonitor {
 

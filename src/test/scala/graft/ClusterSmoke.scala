@@ -23,7 +23,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `ClusterSnapshot` broadcast (batch placement evaluates requests in
   *     executors against a broadcast topology snapshot)
   *                                     -> placement_choose, placement_delete
-  *   - `RackStat` codegen deserializer (placement verification rollup)
+  *   - typed per-block walk (placement verification: case-class
+  *     encoders over sorted runs after one pinned exchange, behind a
+  *     broadcast annotated topology)
   *                                     -> placement_verify,
   *                                        placement_hierarchy_stats
   *

@@ -2,6 +2,7 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Verification
@@ -27,51 +28,88 @@ class PropertySpec extends AnyFunSuite {
       n.path.split('/')(1), n.path.split('/')(2)))
     .toDF("datanode_uuid", "path", "dc", "rack").cache()
 
+  /** A model topology node: uuid, `/dc/rack/leaf` path and printed ip. */
+  private case class ModelNode(uuid: String, path: String, ip: String)
+
   /** Independent model of verifyBlockPlacementBalancedOptimal (reference
-    * rules, written directly from the spec — no shared code with the Spark
-    * operator). */
-  private def modelVerify(replicaUuids: Seq[String], require: Int): Boolean = {
-    if (replicaUuids.isEmpty) return false
-    val paths = replicaUuids.map(u => nodes.find(_.uuid == u).get.path)
-    val edges = paths.flatMap(PolicyEngine.ancestorEdges)
+    * rules and message texts, written directly from the spec — no shared
+    * code with the Spark operator): (satisfied, reason_code, reason). */
+  private def modelVerify(topo: Seq[ModelNode], replicaUuids: Seq[String],
+                          require: Int): (Boolean, String, String) = {
+    val located = replicaUuids.map(u => topo.find(_.uuid == u).get)
+    val nodeList = located.map(_.ip).sorted.map(ip => s"($ip)").mkString(",")
+    val edges = located.flatMap(n => PolicyEngine.ancestorEdges(n.path))
     val perParentChild = edges.groupBy(identity).view.mapValues(_.size).toMap
     val byParent = perParentChild.groupBy(_._1._1)
-    val rootTotal = byParent.get("").map(_.values.sum).getOrElse(0)
-    if (rootTotal < require) return false
-    val childrenOf = nodes.flatMap(n => PolicyEngine.ancestorEdges(n.path))
+    val childrenOf = topo.flatMap(n => PolicyEngine.ancestorEdges(n.path))
       .distinct.groupBy(_._1).view.mapValues(_.size).toMap
-    byParent.forall { case (parent, cc) =>
+    val optimal = byParent.forall { case (parent, cc) =>
       val groups = cc.size
       val leaf = cc.values.sum
       val available = childrenOf(parent)
       val spreadOk = if (leaf <= available) groups == leaf else groups == available
       spreadOk && cc.values.max - cc.values.min <= 1
     }
+    if (located.isEmpty || located.size < require)
+      (false, "not_enough", s"not enough storage nodes:[$nodeList], require:$require")
+    else if (!optimal)
+      (false, "not_optimal",
+        s"placement not optimal, datanodes:[$nodeList], require replica:$require")
+    else (true, null, null)
   }
 
-  test("property: Spark verification agrees with the independent model " +
-    "on 200 random replica sets") {
+  private def modelNodes(ns: Seq[NodeMeta]): Seq[ModelNode] =
+    ns.map(n => ModelNode(n.uuid, n.path, n.path.split('/')(3)))
+
+  /** 3 DCs whose racks hold 1 to 4 hosts; ips differ from the path leaves. */
+  private val uneven: Seq[ModelNode] = for {
+    (dc, hostsPerRack) <- Seq("az1" -> Seq(1, 3), "az2" -> Seq(2, 2, 4), "az3" -> Seq(1))
+    (nHosts, rack) <- hostsPerRack.zipWithIndex
+    host <- 0 until nHosts
+  } yield ModelNode(s"dn-$dc-$rack-$host", s"/$dc/r$rack/h$host",
+    s"10.${dc.last}.$rack.$host")
+
+  /** Verifies 200 seeded random replica sets over `topo` in one Spark job,
+    * checks every verdict against the model and returns the reason codes
+    * seen (null for satisfied). */
+  private def checkAgainstModel(topo: Seq[ModelNode], topoDf: DataFrame,
+                                maxReplicas: Int, maxRequire: Int): Set[String] = {
     val cases = (1 to 200).map { i =>
       val rnd = new Random(i)
-      val n = rnd.nextInt(8) // 0..7 replicas, duplicates allowed
-      val uuids = Vector.fill(n)(nodes(rnd.nextInt(nodes.size)).uuid)
-      (i.toLong, uuids, 1 + rnd.nextInt(5))
+      val n = rnd.nextInt(maxReplicas + 1) // duplicates allowed
+      val uuids = Vector.fill(n)(topo(rnd.nextInt(topo.size)).uuid)
+      (i.toLong, uuids, 1 + rnd.nextInt(maxRequire))
     }
-    // batch every sampled case into ONE Spark job
     val replicas = cases.flatMap { case (id, uuids, _) =>
       uuids.zipWithIndex.map { case (u, ix) => (id, ix, u) }
     }.toDF("block_id", "replica_index", "datanode_uuid")
     val blocks = cases.map { case (id, _, req) => (id, req) }
       .toDF("block_id", "require_replica")
     val got = Verification.verifyBalancedOptimal(replicas, topoDf, blocks)
-      .collect().map(r => r.getLong(0) -> r.getAs[Boolean]("satisfied")).toMap
-    var satisfiedSeen = 0
+      .collect().map(r => r.getLong(0) -> ((r.getAs[Boolean]("satisfied"),
+        r.getAs[String]("reason_code"), r.getAs[String]("reason")))).toMap
+    assert(got.size == cases.size)
     cases.foreach { case (id, uuids, req) =>
-      val want = modelVerify(uuids, req)
-      if (want) satisfiedSeen += 1
-      assert(got(id) == want, s"case $id uuids=$uuids require=$req spark=${got(id)}")
+      assert(got(id) == modelVerify(topo, uuids, req),
+        s"case $id uuids=$uuids require=$req")
     }
-    assert(satisfiedSeen > 0, "degenerate sample: no satisfied case generated")
+    got.values.map(_._2).toSet
+  }
+
+  test("property: Spark verification agrees with the independent model " +
+    "on 200 random replica sets") {
+    val codes = checkAgainstModel(modelNodes(nodes), topoDf, maxReplicas = 7, maxRequire = 5)
+    assert(codes.contains(null), "degenerate sample: no satisfied case generated")
+  }
+
+  test("property: verification agrees with the model over 3 DCs whose " +
+    "racks differ in size") {
+    val df = uneven.map(n => (n.uuid, n.path, n.path.split('/')(1),
+        n.path.split('/')(2), n.ip))
+      .toDF("datanode_uuid", "path", "dc", "rack", "ip")
+    val codes = checkAgainstModel(uneven, df, maxReplicas = 9, maxRequire = 7)
+    assert(codes == Set(null, "not_enough", "not_optimal"),
+      s"degenerate sample: reason codes seen $codes")
   }
 
   test("property: chooseTarget picks are distinct, filtered, bounded") {

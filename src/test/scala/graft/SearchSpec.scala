@@ -1,5 +1,8 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import org.apache.spark.SparkThrowable
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{IndexGen, Search}
@@ -183,6 +186,28 @@ class SearchSpec extends AnyFunSuite {
     assert(served == direct)
   }
 
+  /** Runs `read` against the index at `dir`, retrying it when it failed
+    * because the generation that served when it started is gone from disk
+    * after at least two more flips: [[IndexGen.flip]] keeps a superseded
+    * generation for one cycle only, so that is a legal grace-window
+    * expiry. Missing files within the window still fail. */
+  private def retryingGraceExpiry[T](dir: String)(read: => T): T = {
+    def generation = IndexGen.current(dir).get.stripPrefix("gen_").toInt
+    def filesGone(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+        case _: FileNotFoundException => true
+        case t: SparkThrowable =>
+          Set("PATH_NOT_FOUND", "FAILED_READ_FILE.FILE_NOT_EXIST")(t.getCondition)
+        case _ => false
+      }
+    val started = generation
+    try read
+    catch {
+      case e: Exception if filesGone(e) && generation >= started + 2 =>
+        retryingGraceExpiry(dir)(read)
+    }
+  }
+
   test("compaction flips generations atomically under concurrent readers: " +
       "no query ever observes a mixed or missing generation") {
     import org.apache.spark.sql.functions.col
@@ -210,8 +235,10 @@ class SearchSpec extends AnyFunSuite {
     val reader = new Thread(() => {
       try {
         while (!stop.get()) {
-          val got = Search.bm25TopKIndexed(spark, dir, qs, k = 10)
-            .orderBy("query_id", "rk").collect().toSeq
+          val got = retryingGraceExpiry(dir) {
+            Search.bm25TopKIndexed(spark, dir, qs, k = 10)
+              .orderBy("query_id", "rk").collect().toSeq
+          }
           if (got != expected)
             throw new AssertionError(s"mixed generation observed: $got")
         }
@@ -268,8 +295,10 @@ class SearchSpec extends AnyFunSuite {
     val reader = new Thread(() => {
       try {
         while (!stop.get()) {
-          val got = Search.bm25TopKIndexed(spark, dir, qs, k = 10)
-            .orderBy("query_id", "rk").collect().toSeq
+          val got = retryingGraceExpiry(dir) {
+            Search.bm25TopKIndexed(spark, dir, qs, k = 10)
+              .orderBy("query_id", "rk").collect().toSeq
+          }
           if (!legal.contains(got))
             throw new AssertionError(s"mixed generation observed: $got")
         }
